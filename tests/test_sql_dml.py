@@ -178,6 +178,12 @@ def test_parse_merge_detection():
     # ...but WHEN MATCHED inside a string literal is data, not a clause
     d = parse_dml("MERGE INTO t USING SELECT 'WHEN MATCHED THEN DELETE' AS x")
     assert d.kind == "merge"
+    # a clause list must follow ON key; it never becomes source text
+    with pytest.raises(SqlRewriteError, match="ON key"):
+        parse_dml(
+            "MERGE INTO t USING SELECT * FROM s ON s.k = t.k "
+            "WHEN MATCHED THEN DELETE"
+        )
 
 
 def test_merge_into_upserts_by_key(spark, lh):

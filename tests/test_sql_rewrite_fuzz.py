@@ -19,9 +19,39 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bazof_spark.errors import SqlRewriteError  # noqa: E402
 from bazof_spark.sql import rewrite_and_extract_tables  # noqa: E402
+from bazof_spark.sqlcheck import merge_tail_ast, update_body_ast  # noqa: E402
+from sqloracle import check_merge_tail, check_update_body  # noqa: E402
 
 TS = "2019-01-17T00:00:00.000Z"
 MS = 1547683200000
+
+# comments BETWEEN the tokens of a real clause or table factor are
+# trivia: (statement, rewritten, ordered (name, versioned_name) list)
+TS24 = "2024-01-01T00:00:00Z"
+MS24 = 1704067200000
+COMMENT_TRIVIA_CASES = [
+    (
+        f"SELECT * FROM t /* c */ AT ('{TS24}')",
+        f"SELECT * FROM t__{MS24}",
+        [("t", f"t__{MS24}")],
+    ),
+    (
+        f"SELECT * FROM t -- c\nAT ('{TS24}')",
+        f"SELECT * FROM t__{MS24}",
+        [("t", f"t__{MS24}")],
+    ),
+    (
+        f"SELECT * FROM t FOR SYSTEM_TIME AS OF /*x*/ '{TS24}'",
+        f"SELECT * FROM t__{MS24}",
+        [("t", f"t__{MS24}")],
+    ),
+    ("SELECT * FROM /* c */ t", "SELECT * FROM /* c */ t", [("t", "t")]),
+    (
+        "SELECT * FROM a, /*c*/ b",
+        "SELECT * FROM a, /*c*/ b",
+        [("a", "a"), ("b", "b")],
+    ),
+]
 
 
 def names(tables):
@@ -63,6 +93,12 @@ def test_quote_inside_comment_does_not_open_string():
     out, tables = rewrite_and_extract_tables(sql)
     assert f"financials__{MS}" in out
     assert names(tables) == {f"financials__{MS}"}
+    # ...and a comment inside a clause or factor list neither hides it
+    # nor breaks it
+    for sql, rewritten, expected in COMMENT_TRIVIA_CASES:
+        out, tables = rewrite_and_extract_tables(sql)
+        assert out == rewritten, sql
+        assert [(t.name, t.versioned_name) for t in tables] == expected, sql
 
 
 def test_comment_marker_inside_string_is_not_a_comment():
@@ -247,6 +283,21 @@ def test_merge_keywords_inside_strings_and_comments():
     assert d.kind == "merge" and "AS doc FROM s" in d.select
     assert "WHEN MATCHED" in d.select  # the string literal stays
     assert not d.select.rstrip().upper().endswith("INSERT *")  # clause gone
+    # a comment inside ON key or after the last clause is trivia
+    d = parse_dml(
+        "MERGE INTO t USING SELECT * FROM s ON /*c*/ key "
+        "WHEN MATCHED AND v < 0 THEN DELETE WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert (d.kind, d.table, d.select) == ("merge_multi", "t", "SELECT * FROM s")
+    assert d.clauses == (("delete", "v < 0"),) and d.insert_unmatched
+    assert d.by_source == () and d.by_source_delete is None
+    d = parse_dml(
+        "MERGE INTO t USING SELECT * FROM s ON key "
+        "WHEN MATCHED THEN DELETE -- tail"
+    )
+    assert (d.kind, d.table, d.select, d.pred) == (
+        "merge_delete", "t", "SELECT * FROM s", ""
+    )
 
 
 def test_merge_multi_clause_fuzz_strings_stay_inert():
@@ -339,7 +390,7 @@ def test_update_keyword_inside_string_or_comment_is_not_dml():
 
 
 def test_round7_statements_inside_strings_and_comments_inert():
-    """The round-7 statement regexes (RENAME COLUMN / ALTER COLUMN TYPE
+    """The round-7 statements (RENAME COLUMN / ALTER COLUMN TYPE
     / MERGE delete / insert-only) must be statement-leading only: the
     same text inside string literals, comments, or mid-query never
     parses as a statement."""
@@ -389,10 +440,10 @@ def test_round7_statements_leading_trivia_and_case():
 
 
 def test_update_body_parsing_is_linear():
-    """ADVICE r6: _split_top_level recomputed paren depth per candidate
-    (O(n²)); a machine-generated UPDATE with thousands of SET commas
-    must now parse in well under a second (the quadratic form took
-    tens of seconds at this size)."""
+    """A machine-generated UPDATE with thousands of SET commas must
+    parse in well under a second (a splitter that recomputes paren
+    depth per candidate comma is O(n²) and took tens of seconds at
+    this size)."""
     import time
 
     from bazof_spark.sql import parse_dml
@@ -406,13 +457,16 @@ def test_update_body_parsing_is_linear():
     assert d.kind == "update" and len(d.sets) == n
     assert d.select == "key IN ('a', 'b')"
     assert elapsed < 2.0, f"UPDATE body parse took {elapsed:.1f}s"
+    body = sql.removeprefix("UPDATE t SET ")
+    check_update_body(body, update_body_ast(body))
 
 
 def test_merge_clause_list_generative_roundtrip():
     """Generative parser fuzz: random legal clause lists rendered to
     SQL must parse back to exactly the structures that produced them —
     the splitter can never mis-segment across predicates carrying
-    parens, quotes, commas, or CASE…THEN text."""
+    parens, quotes, commas, or CASE…THEN text — and the regex oracle
+    must read every clause list the same way."""
     import random
 
     from bazof_spark.sql import parse_dml
@@ -463,10 +517,9 @@ def test_merge_clause_list_generative_roundtrip():
                 + (f" AND {by_src}" if by_src else "")
                 + " THEN DELETE"
             )
-        sql = (
-            "MERGE INTO t USING SELECT * FROM src WHERE x = ',' ON key "
-            + " ".join(parts)
-        )
+        select = "SELECT * FROM src WHERE x = ',' ON key " + " ".join(parts)
+        sql = "MERGE INTO t USING " + select
+        check_merge_tail(select, merge_tail_ast(select))
         d = parse_dml(sql)
         # the canonical two-clause form routes to the legacy kind
         if (
@@ -483,10 +536,8 @@ def test_merge_clause_list_generative_roundtrip():
             and not insert
             and by_src is None
         ):
-            # the single-form router takes ANY lone matched-DELETE
-            # (predicated or not) — _MERGE_DELETE_SUFFIX_RE's pred is
-            # optional (exposed when the round-10 fuzz widened the RNG
-            # stream; the model previously only covered pred == "")
+            # ANY lone matched-DELETE (predicated or not) routes to
+            # the single delete form
             assert d.kind == "merge_delete", sql
             assert d.pred == matched[0][1], sql
             continue

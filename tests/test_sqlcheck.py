@@ -1,9 +1,7 @@
-"""The independent token-level MERGE validator (bazof_spark/sqlcheck.py)
-— round 9's checked-invariant upgrade of the regex clause extraction:
-every successful _parse_merge_clauses result is re-derived by a second
-implementation (paren/CASE-depth tracking, no regex anchors) and any
-divergence raises. These tests pin the validator's own grammar and
-prove the crosscheck actually trips on wrong extractions."""
+"""The token-level SQL grammar (bazof_spark/sqlcheck.py) — the one
+parser behind Lakehouse.sql. These tests pin its grammar directly and,
+on generated statements, compare it against the independently written
+regex derivation in tests/sqloracle.py (the differential oracle)."""
 
 import os
 import sys
@@ -12,17 +10,38 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bazof_spark.sql import SqlRewriteError, parse_dml  # noqa: E402
+from bazof_spark.asof import epoch_millis  # noqa: E402
+from bazof_spark.sql import (  # noqa: E402
+    VersionedTable,
+    parse_dml,
+    rewrite_and_extract_tables,
+)
 from bazof_spark.sqlcheck import (  # noqa: E402
+    bare_factor_candidates,
+    merge_tail_ast,
+    time_travel_ops,
+    tokenize_spans,
+    update_body_ast,
+)
+from sqloracle import (  # noqa: E402
+    OracleMismatch,
     canon,
-    crosscheck_merge_clauses,
-    parse_merge_tail,
-    tokenize,
+    canon_merge_ast,
+    canon_update_body,
+    check_merge_tail,
+    check_time_travel,
+    check_update_body,
 )
 
 
+def _kinds_and_texts(text):
+    return [(k, t) for k, t, _, _ in tokenize_spans(text)]
+
+
 def test_tokenizer_strings_comments_operators():
-    toks = tokenize("a >= 'x -- not a comment' -- real\n/*c*/ b.c <> 1.5")
+    toks = _kinds_and_texts(
+        "a >= 'x -- not a comment' -- real\n/*c*/ b.c <> 1.5"
+    )
     assert toks == [
         ("word", "a"),
         ("punct", ">="),
@@ -32,18 +51,18 @@ def test_tokenizer_strings_comments_operators():
         ("word", "1.5"),
     ]
     # '' escape stays inside one string token
-    assert tokenize("'a''b'") == [("str", "'a''b'")]
+    assert _kinds_and_texts("'a''b'") == [("str", "'a''b'")]
     assert canon("x   =\n1") == "x = 1"
 
 
 def test_parse_merge_tail_tracks_case_and_paren_depth():
-    r = parse_merge_tail(
+    r = canon_merge_ast(merge_tail_ast(
         "SELECT * FROM s ON key "
         "WHEN MATCHED AND CASE WHEN x THEN true ELSE false END "
         "THEN UPDATE SET v = CASE WHEN a THEN 1 ELSE 2 END, "
         "w = f(a, b) "
         "WHEN NOT MATCHED THEN INSERT *"
-    )
+    ))
     assert r["src"] == "SELECT * FROM s"
     c0, c1 = r["clauses"]
     assert c0["pred"] == "CASE WHEN x THEN true ELSE false END"
@@ -55,138 +74,145 @@ def test_parse_merge_tail_tracks_case_and_paren_depth():
         "neg": True, "by_src": False, "pred": "", "action": "INSERT *"
     }
     # WHEN MATCHED inside parens (a subquery) is NOT a clause start
-    r = parse_merge_tail(
+    r = merge_tail_ast(
         "SELECT * FROM s ON key WHEN MATCHED AND x IN "
         "(SELECT k FROM log WHERE note = 'WHEN MATCHED') THEN DELETE"
     )
     assert len(r["clauses"]) == 1
-    # no ON key before the first WHEN → not a clause list
-    assert parse_merge_tail("SELECT * FROM s WHEN MATCHED THEN DELETE") is None
+    # no clause head at all → the whole text is the source query
+    assert merge_tail_ast("SELECT 'WHEN MATCHED THEN DELETE' FROM s") is None
+    # a clause list not anchored on ON key is an error, not a source
+    with pytest.raises(ValueError, match="must follow 'ON key'"):
+        merge_tail_ast("SELECT * FROM s WHEN MATCHED THEN DELETE")
 
 
 def test_crosscheck_trips_on_wrong_extraction():
+    """The MERGE and time-travel oracle comparators pass the library's
+    own extraction and fail on every planted divergence: a wrong
+    predicate, action, clause set or source split (MERGE), a wrong
+    rewrite or table list (time travel)."""
     sel = (
         "SELECT * FROM s ON key WHEN MATCHED AND a THEN DELETE "
         "WHEN NOT MATCHED THEN INSERT *"
     )
-    # correct extraction passes
-    crosscheck_merge_clauses(
-        sel, "SELECT * FROM s", (("delete", "a"),), True, ()
-    )
-    # wrong predicate
-    with pytest.raises(ValueError, match="WHEN MATCHED clauses disagree"):
-        crosscheck_merge_clauses(
-            sel, "SELECT * FROM s", (("delete", "b"),), True, ()
-        )
-    # wrong action kind
-    with pytest.raises(ValueError, match="disagree"):
-        crosscheck_merge_clauses(
-            sel, "SELECT * FROM s", (("update", "a"),), True, ()
-        )
-    # dropped insert clause
-    with pytest.raises(ValueError, match="WHEN NOT MATCHED clauses"):
-        crosscheck_merge_clauses(
-            sel, "SELECT * FROM s", (("delete", "a"),), False, ()
-        )
-    # wrong source split
-    with pytest.raises(ValueError, match="source split"):
-        crosscheck_merge_clauses(
-            sel, "SELECT * FROM other", (("delete", "a"),), True, ()
-        )
+    ast = merge_tail_ast(sel)
+    check_merge_tail(sel, ast)
+
+    def planted(**changes):
+        c0 = dict(ast["clauses"][0], **changes)
+        return {"src": ast["src"], "clauses": [c0] + ast["clauses"][1:]}
+
+    with pytest.raises(OracleMismatch, match="MERGE clause list"):
+        check_merge_tail(sel, planted(pred="b"))
+    with pytest.raises(OracleMismatch):
+        check_merge_tail(sel, planted(action="UPDATE SET *"))
+    with pytest.raises(OracleMismatch):
+        check_merge_tail(sel, {"src": ast["src"], "clauses": ast["clauses"][:1]})
+    with pytest.raises(OracleMismatch):
+        check_merge_tail(sel, dict(ast, src="SELECT * FROM other"))
+    with pytest.raises(OracleMismatch):
+        check_merge_tail(sel, None)
+
+    sql = "SELECT * FROM t AT ('2024-01-01T00:00:00Z') JOIN u ON 1=1"
+    rewritten, tables = rewrite_and_extract_tables(sql)
+    check_time_travel(sql, (rewritten, tables))
+    with pytest.raises(OracleMismatch, match="time-travel extraction"):
+        check_time_travel(sql, (rewritten, tables[:1]))
+    with pytest.raises(OracleMismatch):
+        check_time_travel(sql, (rewritten, tables[::-1]))
+    with pytest.raises(OracleMismatch):
+        check_time_travel(sql, (sql, tables))
 
 
-def test_validator_is_live_in_parse_dml():
-    """End-to-end: a statement whose clause list parses fine passes the
-    crosscheck inside parse_dml; the ambiguous shape the two
-    implementations READ DIFFERENTLY (a clause-starting keyword pair
-    inside an unparenthesized CASE) errors loudly instead of compiling
-    different semantics."""
+def test_case_when_inside_merge_predicate_is_not_a_clause_head():
+    """CASE WHEN … THEN inside a MERGE predicate stays inside the
+    predicate, even when a column is literally named `matched`. The
+    regex oracle splits a clause at that `WHEN matched`, which is why
+    the comparison lives in the tests and not on every statement."""
     d = parse_dml(
         "MERGE INTO t USING SELECT * FROM s ON key "
         "WHEN MATCHED AND v = CASE WHEN x THEN 1 ELSE 2 END THEN DELETE "
         "WHEN NOT MATCHED THEN INSERT *"
     )
     assert d.clauses == (("delete", "v = CASE WHEN x THEN 1 ELSE 2 END"),)
-    # a column literally named `matched` inside CASE WHEN: the regex
-    # pass would split a clause there; the depth-tracking validator
-    # would not — the disagreement must surface, not silently pick one
-    with pytest.raises(SqlRewriteError):
-        parse_dml(
-            "MERGE INTO t USING SELECT * FROM s ON key "
-            "WHEN MATCHED AND CASE WHEN matched THEN 1 ELSE 0 END = 1 "
-            "THEN DELETE WHEN NOT MATCHED THEN INSERT *"
-        )
+    select = (
+        "SELECT * FROM s ON key "
+        "WHEN MATCHED AND CASE WHEN matched THEN 1 ELSE 0 END = 1 "
+        "THEN DELETE WHEN NOT MATCHED THEN INSERT *"
+    )
+    d = parse_dml(f"MERGE INTO t USING {select}")
+    assert d.kind == "merge_multi" and d.select == "SELECT * FROM s"
+    assert d.clauses == (("delete", "CASE WHEN matched THEN 1 ELSE 0 END = 1"),)
+    assert d.insert_unmatched
+    with pytest.raises(OracleMismatch):
+        check_merge_tail(select, merge_tail_ast(select))
 
 
 # ---------------------------------------------------------------------------
-# UPDATE-body validator (round 9 follow-through)
+# UPDATE body
 # ---------------------------------------------------------------------------
-
-from bazof_spark.sqlcheck import (  # noqa: E402
-    crosscheck_update_body,
-    parse_update_body,
-)
 
 
 def test_parse_update_body_grammar():
-    sets, pred = parse_update_body(
+    sets, pred = canon_update_body(*update_body_ast(
         "a = coalesce(b, ',WHERE'), c = CASE WHEN x IN (1,2) THEN 'w, z' "
         "ELSE f(y, 2) END WHERE note = 'WHERE a = 1, b = 2' AND k > 3"
-    )
+    ))
     assert sets == (
         ("a", "coalesce ( b , ',WHERE' )"),
         ("c", "CASE WHEN x IN ( 1 , 2 ) THEN 'w, z' ELSE f ( y , 2 ) END"),
     )
     assert pred == "note = 'WHERE a = 1, b = 2' AND k > 3"
     # no WHERE
-    sets, pred = parse_update_body("v = v + 1")
+    sets, pred = update_body_ast("v = v + 1")
     assert sets == (("v", "v + 1"),) and pred == ""
     with pytest.raises(ValueError, match="column = expression"):
-        parse_update_body("not-an-assignment")
+        update_body_ast("not-an-assignment")
 
 
 def test_crosscheck_update_trips_on_wrong_extraction():
+    """The UPDATE-body oracle comparator passes the library's own
+    extraction and fails on a mis-split or a wrong predicate."""
     body = "a = 1, b = 2 WHERE k = 'x'"
-    # correct extraction passes
-    crosscheck_update_body(body, (("a", "1"), ("b", "2")), "k = 'x'")
-    # a mis-split (string-blind regex would glue b=2 into a's expr)
-    with pytest.raises(ValueError, match="disagree"):
-        crosscheck_update_body(body, (("a", "1 , b = 2"),), "k = 'x'")
-    with pytest.raises(ValueError, match="predicate"):
-        crosscheck_update_body(body, (("a", "1"), ("b", "2")), "k = 'y'")
+    check_update_body(body, update_body_ast(body))
+    # a mis-split (string-blind splitting would glue b=2 into a's expr)
+    with pytest.raises(OracleMismatch, match="UPDATE body"):
+        check_update_body(body, ((("a", "1 , b = 2"),), "k = 'x'"))
+    with pytest.raises(OracleMismatch):
+        check_update_body(body, ((("a", "1"), ("b", "2")), "k = 'y'"))
 
 
-def test_update_validator_is_live_in_parse_dml():
-    """parse_dml routes every UPDATE through the crosscheck; a
-    statement whose strings contain WHERE/comma/assignment text must
-    still extract cleanly (both parsers agree), and the checked
-    invariant is observable by monkeypatching one side."""
-    st = parse_dml(
-        "UPDATE t SET note = 'WHERE v = 1, w = 2', v = CASE WHEN "
+def test_update_strings_with_where_and_commas_extract_cleanly():
+    """An UPDATE whose strings contain WHERE/comma/assignment text
+    extracts cleanly, and the regex oracle agrees."""
+    body = (
+        "note = 'WHERE v = 1, w = 2', v = CASE WHEN "
         "v IN (1,2) THEN v + 1 ELSE 0 END WHERE tag = ', WHERE '"
     )
+    st = parse_dml(f"UPDATE t SET {body}")
     assert st is not None and st.kind == "update"
     assert st.sets == (
         ("note", "'WHERE v = 1, w = 2'"),
         ("v", "CASE WHEN v IN (1,2) THEN v + 1 ELSE 0 END"),
     )
     assert st.select == "tag = ', WHERE '"
+    check_update_body(body, update_body_ast(body))
 
 
 def test_update_fuzz_both_parsers_agree():
-    """Generative: random assignment lists with string/paren/CASE
-    booby traps round-trip identically through the regex pass (which
-    self-crosschecks) for 200 seeds."""
+    """Generative: 200 random assignment lists with string/paren/CASE
+    booby traps round-trip through parse_dml, and the regex oracle
+    splits every body the same way."""
     import random
 
     exprs = [
         "1", "v + 1", "coalesce(a, b, ',')", "'WHERE x = 1, y = 2'",
         "CASE WHEN a IN (1,2) THEN ',' ELSE 'THEN' END",
         "f(g(h(x, 'WHERE')), 2)", "a || ', b = 9'",
-        # round-10 authority shapes: scientific literals the tokenizer
-        # reads as three tokens (span slicing must return them intact)
-        # and block comments inside expressions (slices keep interior
-        # trivia; canon comparison ignores it on both sides)
+        # scientific literals the tokenizer reads as three tokens
+        # (span slicing must return them intact) and block comments
+        # inside expressions (slices keep interior trivia; the oracle
+        # comparison ignores it on both sides)
         "v * 1.5e-3", "v + /* bump, WHERE */ 1",
     ]
     preds = [None, "k = 1", "note = ', WHERE ' AND v > 2",
@@ -197,23 +223,39 @@ def test_update_fuzz_both_parsers_agree():
         sets = [(c, rng.choice(exprs)) for c in cols]
         body = ", ".join(f"{c} = {e}" for c, e in sets)
         pred = rng.choice(preds)
-        stmt = f"UPDATE t SET {body}" + (f" WHERE {pred}" if pred else "")
-        st = parse_dml(stmt)
+        body += f" WHERE {pred}" if pred else ""
+        st = parse_dml(f"UPDATE t SET {body}")
         assert st is not None and st.kind == "update"
         assert st.sets == tuple(sets)
         assert st.select == (pred or "")
+        check_update_body(body, update_body_ast(body))
 
 
 # ---------------------------------------------------------------------------
-# Time-travel extraction validator (round 9 follow-through)
+# Time-travel extraction
 # ---------------------------------------------------------------------------
 
-from bazof_spark.sql import rewrite_and_extract_tables  # noqa: E402
-from bazof_spark.sqlcheck import parse_time_travel_tables  # noqa: E402
+
+def _keys(tables: list[VersionedTable]) -> set:
+    """Canonical reference keys of a registered table list:
+    ("at", name, epoch_millis) | ("version", name, ver) |
+    ("changes", name, m1, m2) | ("current", name)."""
+    keys = set()
+    for vt in tables:
+        if vt.changes is not None:
+            m1, m2 = vt.versioned_name.rsplit("_", 2)[-2:]
+            keys.add(("changes", vt.name, int(m1), m2))
+        elif vt.version is not None:
+            keys.add(("version", vt.name, vt.version))
+        elif not vt.as_of.is_current:
+            keys.add(("at", vt.name, epoch_millis(vt.as_of.event_time_at)))
+        else:
+            keys.add(("current", vt.name))
+    return keys
 
 
 def test_parse_time_travel_tables_all_forms():
-    keys = parse_time_travel_tables(
+    _, tables = rewrite_and_extract_tables(
         "WITH c AS (SELECT 1) "
         "SELECT * FROM t AT ('2024-01-01T00:00:00Z') a "
         "JOIN t FOR SYSTEM_TIME AS OF '2024-02-01T00:00:00Z' b ON a.k = b.k "
@@ -223,6 +265,7 @@ def test_parse_time_travel_tables_all_forms():
         "JOIN CHANGES('w', '2024-01-01T00:00:00Z', '2024-03-01T00:00:00Z') "
         "ON 1=1 JOIN x, y ON 1=1"
     )
+    keys = _keys(tables)
     at1 = 1704067200000
     at2 = 1706745600000
     assert keys == {
@@ -235,20 +278,22 @@ def test_parse_time_travel_tables_all_forms():
         ("current", "y"),
     }
     # strings/comments never produce references
-    assert parse_time_travel_tables(
+    _, tables = rewrite_and_extract_tables(
         "SELECT ' FROM fake AT (''2024-01-01T00:00:00Z'') ' AS s "
         "-- FROM ghost\n FROM real"
-    ) == {("current", "real")}
+    )
+    assert _keys(tables) == {("current", "real")}
 
 
 def test_time_travel_crosscheck_is_live():
-    """rewrite_and_extract_tables self-validates: the full query above
-    round-trips, and both sides agree on every form at once."""
+    """A versioned factor, a comma continuation and a Current JOIN of
+    the same table register once each, and the regex oracle agrees."""
     sql = (
         "SELECT * FROM fin AT ('2019-01-17T00:00:00.000Z') f, extra "
         "JOIN fin ON 1=1"
     )
     rewritten, tables = rewrite_and_extract_tables(sql)
+    check_time_travel(sql, (rewritten, tables))
     assert "fin__1547683200000" in rewritten
     assert {t.versioned_name for t in tables} == {
         "fin__1547683200000", "fin", "extra"
@@ -257,8 +302,8 @@ def test_time_travel_crosscheck_is_live():
 
 def test_time_travel_fuzz_both_extractors_agree():
     """Generative: 300 random query skeletons mixing versioned forms,
-    CTE shadows, aliases, comma lists, and booby-trapped strings; every
-    one must pass the live crosscheck inside rewrite_and_extract_tables."""
+    CTE shadows, aliases, comma lists, and booby-trapped strings; the
+    regex oracle must reproduce every rewrite and table list."""
     import random
 
     rng = random.Random(4242)
@@ -291,21 +336,12 @@ def test_time_travel_fuzz_both_extractors_agree():
             q += rng.choice([f" JOIN {p} ON 1=1", f", {p}"])
         if rng.random() < 0.3:
             q += " JOIN shadow ON 1=1"
-        rewrite_and_extract_tables(q)  # crosscheck raises on divergence
+        check_time_travel(q, rewrite_and_extract_tables(q))
 
 
 # ---------------------------------------------------------------------------
-# Round-10 authority functions (the span-aware parsers that now DRIVE
-# the rewrite; the regex pass checks them)
+# Source spans: the parsers hand back ORIGINAL-spelling slices
 # ---------------------------------------------------------------------------
-
-from bazof_spark.sqlcheck import (  # noqa: E402
-    bare_factor_candidates,
-    merge_tail_ast,
-    time_travel_ops,
-    tokenize_spans,
-    update_body_ast,
-)
 
 
 def test_tokenize_spans_offsets_slice_back_to_source():
@@ -314,7 +350,7 @@ def test_tokenize_spans_offsets_slice_back_to_source():
     for kind, text, start, end in toks:
         assert src[start:end] == text, (kind, text)
     # scientific notation splits into word/punct/word — the reason the
-    # authority hands back SLICES, never token re-joins
+    # parsers hand back SLICES, never token re-joins
     assert [t[1] for t in toks[-3:]] == ["1.5e", "-", "3"]
     assert src[toks[-3][2]:toks[-1][3]] == "1.5e-3"
 
@@ -348,8 +384,8 @@ def test_time_travel_ops_spans_and_family_order():
         "JOIN u FOR VERSION AS OF 3 ON 1=1"
     )
     ops = time_travel_ops(sql)
-    # family order mirrors the checker's substitution passes:
-    # CHANGES, then versions, then AT
+    # family order (the table-list registration order): CHANGES, then
+    # versions, then AT
     assert [op["kind"] for op in ops] == ["changes", "version", "at"]
     for op in ops:
         frag = sql[op["start"]:op["end"]]
@@ -370,10 +406,7 @@ def test_bare_factor_candidates_order_and_filters():
     )
     # positional order, CTE 'shadow' filtered, string content ignored
     assert got == ["a", "b", "select_free"]
-    # a comma continuation AFTER a JOIN's ON clause is outside both
-    # derivations' factor walks — the invariant is that they agree
-    # (the regex checker's _COMMA_FACTOR_RE stops there too), so the
-    # relation simply stays unregistered rather than mis-scanned
+    # every factor of a comma-separated FROM list registers
     assert bare_factor_candidates("SELECT 1 FROM a, b, c") == [
         "a", "b", "c"
     ]
